@@ -59,7 +59,7 @@ def z_expr(n: str = "n", sum_n: str = "sum_n", sum_sq: str = "sum_sq",
     ``(n - sum_n/c) / sqrt((sum_sq - sum_n^2/c) / (c - 1))`` with a
     NULL result when the window variance is exactly zero (exact
     identity test).  Sample (n-1) variance.  Valid SQL in both Spark
-    and DuckDB -- embed verbatim in both surfaces.  The guard multiplies
+    and DuckDB -- embed verbatim in both engines.  The guard multiplies
     run in DECIMAL(38,0): BIGINT would silently wrap in Spark (and
     promote in DuckDB) once sum_n^2 passes 2^63 -- see the module
     docstring.  ``sum_sq`` is expected in DECIMAL(38,0) already
@@ -80,7 +80,7 @@ def z_expr(n: str = "n", sum_n: str = "sum_n", sum_sq: str = "sum_sq",
 
 
 #: the overflow-safe square for the window sum -- ONE spelling for the
-#: DataFrame scorers and both SQL surfaces
+#: DataFrame scorers and the DuckDB oracle
 SUM_SQ_EXPR = "CAST(n AS DECIMAL(38,0)) * n"
 
 

@@ -63,8 +63,8 @@ PAGERANK_ITERS = 5
 
 #: per-edge share: the mass vertex ``pr`` pushes along one of its
 #: ``deg`` edges.  ONE spelling, evaluated verbatim by the DataFrame
-#: program, the Spark-SQL twin, and the DuckDB oracle (identical
-#: IEEE double division + floor on both engines -> identical BIGINT).
+#: program and the DuckDB oracle (identical IEEE double division +
+#: floor on both engines -> identical BIGINT).
 PR_SHARE_EXPR = "CAST(floor(CAST(pr AS DOUBLE) / deg) AS BIGINT)"
 
 #: per-node update from the summed incoming shares (column ``contrib``).
@@ -264,8 +264,8 @@ def pagerank_keepers(
 # ---------------------------------------------------------------------------
 # Shared SQL surface: the same computation as engine-neutral CTE text,
 # assuming CTEs/relations ``edges(a, b)`` (symmetric, distinct) and
-# ``verts(v)`` already exist.  Both the DuckDB oracle and the Spark
-# SQL-mode twin embed this text verbatim (the PMI_EXPR discipline).
+# ``verts(v)`` already exist.  The DuckDB oracle embeds this text
+# verbatim (the PMI_EXPR discipline).
 # ---------------------------------------------------------------------------
 
 

@@ -59,15 +59,14 @@ def register_legs(
         LEG_BUILDERS[name] = builder
 
 
-def register(name: str, oracle: str | None):
+def register(name: str, oracle: str):
     def deco(fn: Query) -> Query:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             apply_runtime_confs(spark)
             return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return wrapped
 
     return deco

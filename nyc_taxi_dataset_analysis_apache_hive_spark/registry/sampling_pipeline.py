@@ -51,7 +51,7 @@ _SPLIT_CASE = (
     f"WHEN u < {_SPLIT_BOUNDS[1]!r} THEN 1 ELSE 2 END"
 )
 
-#: BM25 constants + fixed term list embedded into BOTH SQL surfaces
+#: BM25 constants + fixed term list embedded into the DuckDB oracle
 #: (repr-roundtripped, the _SPLIT_BOUNDS precedent) so the doubles are
 #: bit-identical to the ones the DataFrame leg folds into its plan.
 _BM25_C1, _BM25_C2, _BM25_C3 = textops.bm25_constants()
@@ -497,7 +497,7 @@ def s6_hash_split(spark, sf):
       ORDER cross-engine, not just the membership.
     * ``op='curriculum'`` (r9): sampling.curriculum_shards' score-ordered
       layout over the same N (curriculum key: n_chars DESC, longest
-      first, doc_id tie-break; NULLS LAST spelled on every surface) --
+      first, doc_id tie-break; NULLS LAST spelled in both engines) --
       ``v`` = (rank * N) div total (engine-exact integer cut), ``pos`` =
       the exact global rank that sampling.global_rank computes with a
       range exchange + broadcast offsets instead of the single-task sort
@@ -943,7 +943,7 @@ def s7_stratified_rates(spark, sf):
         .select(
             F.lit("temp").alias("op"),
             # NULL lang is a real stratum since r8 -- surface it as a
-            # visible key on all three parity engines (concat_ws would
+            # visible key on both parity engines (concat_ws would
             # silently skip it; DuckDB's || would NULL the whole key)
             F.concat_ws(
                 ":", F.coalesce(F.col("lang"), F.lit("NULL")), "epoch"
@@ -1814,7 +1814,7 @@ def tv1_text_stats(spark, sf):
     to BIGINT micro-units before the per-doc sum so the aggregate is
     exact integer arithmetic in both engines; the k1/b-derived float
     constants come from ONE definition (textops.bm25_constants),
-    repr-roundtripped into both SQL surfaces.  ``bm25_topk`` (r10) =
+    repr-roundtripped into the oracle.  ``bm25_topk`` (r10) =
     multi-query BM25 retrieval (textops.bm25_topk): top-10 documents
     per named query of BM25_TOPK_QUERIES from ONE corpus pass over the
     union of query terms -- the broadcast (query, term) map joined on
@@ -1835,7 +1835,7 @@ def tv1_text_stats(spark, sf):
     and ``hybrid_ivf`` (r13) the SAME fusion over the checkpointed
     IVF-probed dense ranks instead -- the deployment-path pair a
     billion-vector corpus actually serves; every fused rank is oracled
-    on the raw micro sums in both SQL surfaces."""
+    on the raw micro sums in the DuckDB oracle."""
     docs = _t(spark, sf, "documents")
     nulll = F.lit(None).cast("long")
     # ONE corpus tokenize (r18, guide §2.4/§6 one-scan discipline; the
@@ -2089,13 +2089,12 @@ def tv1_text_stats(spark, sf):
 # column as the two-word phrase string.
 # ---------------------------------------------------------------------------
 
-#: ranking depth shared by all three legs (one definition, every surface)
+#: ranking depth shared by all three legs (one definition, both engines)
 _TV2_TOP_K = 20
 
-#: engine-NEUTRAL collocation scoring CTEs: count tables, the shared
-#: textops.PMI_EXPR doubles, and the three rankings.  Both engines get
-#: this text verbatim; only the ``cuni``/``cbg`` extraction CTEs are
-#: engine-specific (DuckDB list_zip vs Spark's indexed transform).
+#: the oracle's collocation scoring CTEs: count tables, the shared
+#: textops.PMI_EXPR doubles, and the three rankings; they follow the
+#: ``cuni``/``cbg`` extraction CTEs inside _TV1_COLLOC_DUCK_CTES.
 _TV1_COLLOC_SCORE_CTES = f"""
     cucnt AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM cuni GROUP BY w),
     cutot AS (SELECT CAST(count(*) AS BIGINT) AS nu FROM cuni),
@@ -2136,8 +2135,7 @@ _TV1_COLLOC_SCORE_CTES = f"""
 #: the WINDOWED scoring CTEs (r17, verdict task 7): same shared
 #: PMI_EXPR doubles over the forward +-COLLOCATION_WINDOW pair stream
 #: ``cwin``, reusing the unigram count CTEs (cucnt/cutot) from the
-#: adjacent-bigram block above.  Engine-neutral; only the ``cwin``
-#: extraction differs per engine.
+#: adjacent-bigram block above.
 _TV1_COLLOC_WIN_SCORE_CTES = f"""
     cwbcnt AS (
       SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_ab FROM cwin GROUP BY 1, 2
@@ -2162,7 +2160,7 @@ _TV1_COLLOC_WIN_SCORE_CTES = f"""
 """
 
 #: the three collocation legs in tv1's (op, doc_id, token, n, m, score)
-#: schema -- shared verbatim by both SQL surfaces
+#: schema, appended to the tv1 oracle
 _TV1_COLLOC_SELECTS = f"""
     SELECT 'colloc' AS op, CAST(NULL AS BIGINT) AS doc_id,
            w1 || ' ' || w2 AS token, c_ab AS n, rank AS m,

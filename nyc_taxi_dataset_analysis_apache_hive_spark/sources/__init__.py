@@ -1,9 +1,8 @@
-from .readers import load_table, load_testdata, read_trips_csv, read_trips_parquet
+from .readers import load_table, read_trips_csv, read_trips_parquet
 from .writers import write_clean_partitioned, write_clean_table
 
 __all__ = [
     "load_table",
-    "load_testdata",
     "read_trips_csv",
     "read_trips_parquet",
     "write_clean_partitioned",

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import TESTDATA_TABLES, TRIP_SCHEMA
+from ..schema import TRIP_SCHEMA
 
 
 def read_trips_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -114,18 +114,3 @@ def read_documents_jsonl(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all driver tables and register them as temp views.
-
-    The temp-view registration mirrors the reference's metastore catalog
-    (``USE ss``, REF:18): every query can then be written against named
-    tables in pure SQL as well as the DataFrame API.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

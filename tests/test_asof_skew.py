@@ -838,3 +838,43 @@ def test_connected_components_reliable_checkpoint_with_auto_doubling(
         d for _, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith("rdd-")
     ]
     assert 1 <= len(rdd_dirs) <= 3, rdd_dirs
+
+
+@pytest.mark.scale
+def test_connected_components_matches_union_find_on_random_graphs(spark):
+    """Three seeded random multigraphs (self-loops, duplicate and
+    reversed edges included): the DataFrame loop and a pure-Python
+    union-find agree on every component label."""
+    import random
+
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
+
+    rnd = random.Random(7)
+    for trial in range(3):
+        edges = [
+            (rnd.randrange(40), rnd.randrange(40)) for _ in range(60)
+        ]
+        parent = list(range(40))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        touched = set()
+        for a, b in edges:
+            touched.update((a, b))
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        expected = {v: find(v) for v in touched}
+
+        df = spark.createDataFrame(edges, "a long, b long")
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in dedup.connected_components(
+                df, a_col="a", b_col="b"
+            ).collect()
+        }
+        assert got == expected, f"trial {trial}"
